@@ -154,6 +154,33 @@ object Bench {
     }
   }
 
+  /** Calibration drift beyond which a snapshot was taken on a moving host
+    * (bench/PROTOCOL.md drift rule): it is flagged `calib_suspect` and
+    * retaken, not compared.
+    */
+  private[graft] val CalibDriftLimit = 1.3
+
+  private[graft] def drifted(a: Double, b: Double): Boolean =
+    a > 0 && b > 0 && math.max(a, b) / math.min(a, b) > CalibDriftLimit
+
+  /** `calib_mt_ms` of the newest snapshot in `benchDir` that carries one:
+    * highest round N of `BENCH_local_r<N>[_tag].json`, the untagged final
+    * snapshot of a round before its tagged (e.g. `_baseline`) twins.
+    */
+  private[graft] def newestSnapshotCalibMt(benchDir: java.io.File): Option[Double] = {
+    val Name = """BENCH_local_r(\d+)(_.*)?\.json""".r
+    val Field = """"calib_mt_ms":([0-9.]+)""".r
+    val snaps = Option(benchDir.listFiles()).toSeq.flatten.collect {
+      case f if Name.matches(f.getName) =>
+        val Name(round, tag) = f.getName
+        (round.toInt, tag == null, f)
+    }
+    snaps.sortBy { case (round, untagged, _) => (round, untagged) }.reverseIterator
+      .flatMap { case (_, _, f) => Field.findFirstMatchIn(Files.readString(f.toPath)) }
+      .map(_.group(1).toDouble)
+      .nextOption()
+  }
+
   def main(args: Array[String]): Unit = {
     val maxLoad = sys.env.get("SPARK_GRAFT_MAX_LOAD").flatMap(_.toDoubleOption)
       .getOrElse(0.8)
@@ -166,7 +193,10 @@ object Bench {
     // r18: session config centralized in SessionFactory (VERDICT r17 #3) —
     // the r17 cached-plan AQE flag and its rationale live there now, shared
     // with the production CLI entries instead of being harness-private.
+    // nanosAsLong is the harness's own: events.parquet is read directly
+    // below, and NANOS-era fixtures fail in the production builder.
     val spark = SessionFactory.builder(s"local[$cpus]", "graft-bench", cpus)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -218,10 +248,14 @@ object Bench {
     // timed section — standard bench hygiene so run 1 isn't a JIT sample.
     Seq("lineitem", "documents", "embeddings", "events")
       .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
-    // Warm each query SHAPE once at the smallest SF: codegen compilation
-    // (janino) costs ~100s of ms per novel operator tree and is a one-time
-    // JVM cost, not per-query work — timing it would measure compiler
-    // throughput, not engine throughput.
+    // Warm each query SHAPE once at the smallest SF: JIT, parquet footers
+    // and FS cache. It does NOT keep janino compile cost (~100s of ms per
+    // novel operator tree) out of the timed rows: one catalog pass compiles
+    // ~2,700 generated classes at sf0.01, far over the JVM-wide codegen
+    // cache (SessionFactory.CodegenCacheMaxEntries = 1024), so the LRU has
+    // evicted the warm pass's classes before the catalog section starts.
+    // What removes compile time is `time2`: each row's second run reuses
+    // the classes its first run compiled.
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory) catalog.foreach { name =>
       try SparkEntry.queries(name)(spark, warmDir).count()
@@ -563,6 +597,11 @@ object Bench {
     // looked clean.
     val calibEnd = Calib.singleMs()
     val calibMtEnd = Calib.multiMs()
+    // Calibration gate: drift inside the run, or of the
+    // all-cores stamp against the newest committed snapshot, flags this
+    // snapshot for a retake instead of a comparison.
+    val calibSuspect = drifted(calibStart, calibEnd) || drifted(calibMtStart, calibMtEnd) ||
+      newestSnapshotCalibMt(new java.io.File("bench")).exists(drifted(calibMtStart, _))
 
     // Locale-pinned number rendering (r16 harness deep-read): the `f`
     // interpolator uses the JVM default locale — a comma-decimal locale
@@ -586,6 +625,7 @@ object Bench {
         s""""loadavg_streaming":"$loadAtStreaming",""" +
         s""""calib_ms":${fmt3(calibStart)},"calib_mt_ms":${fmt3(calibMtStart)},""" +
         s""""calib_ms_end":${fmt3(calibEnd)},"calib_mt_ms_end":${fmt3(calibMtEnd)},""" +
+        s""""calib_suspect":$calibSuspect,""" +
         s""""sf":"$sfDir"$failed$extra}"""
     }
     // Full line first (the complete per-query map — the snapshot of record),

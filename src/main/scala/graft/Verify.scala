@@ -11,7 +11,10 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // shared engine session config (r18, VERDICT r17 #3): same builder as
     // Bench/CLI so the correctness dump runs the same plans the bench times
+    // nanosAsLong: the harness may meet NANOS-era fixtures, which the
+    // production builder rejects (SessionFactory scaladoc)
     val spark = SessionFactory.builder(s"local[$cpus]", "graft-verify", cpus)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

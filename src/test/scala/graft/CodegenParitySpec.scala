@@ -29,7 +29,9 @@ import graft.functions._
   * DataFrame output does not prove the codegen path was ever taken).
   */
 class CodegenParitySpec extends AnyFunSuite {
-  private lazy val spark = SparkSpec.spark
+  // eager: the first generate() below sizes Spark's JVM-wide codegen cache
+  // from the active session's static conf, so the session must exist first
+  private val spark = SparkSpec.spark
 
   private val Rounds = 300
 

@@ -10,6 +10,8 @@ object SparkSpec {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    // static conf, sized by whichever session compiles first: match production
+    .config("spark.sql.codegen.cache.maxEntries", SessionFactory.CodegenCacheMaxEntries.toLong)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .getOrCreate()
