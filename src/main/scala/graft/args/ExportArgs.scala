@@ -42,7 +42,8 @@ object ConnectionArgs {
     "postgresql" -> "org.postgresql.Driver",
     "mysql" -> "com.mysql.cj.jdbc.Driver",
     "mariadb" -> "org.mariadb.jdbc.Driver",
-    "h2" -> "org.h2.Driver"
+    "h2" -> "org.h2.Driver",
+    "derby" -> "org.apache.derby.iapi.jdbc.AutoloadedDriver"
   )
 
   def driverFor(url: String): String = {

@@ -1,19 +1,22 @@
 package graft.sink
 
 import java.io.ByteArrayOutputStream
-import java.nio.ByteBuffer
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.avro.Schema
 import org.apache.avro.file.{CodecFactory, DataFileWriter}
-import org.apache.avro.generic.{GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.EncoderFactory
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.avro.io.{DatumWriter, Encoder, EncoderFactory}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.types._
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** Avro container-file sink with the reference's output contract
   * (`/root/reference/dbeam-core/src/main/java/com/spotify/dbeam/avro/JdbcAvroIO.java:60-232`):
@@ -23,10 +26,18 @@ import org.apache.spark.util.LongAccumulator
   *   - codec `deflate1-9 | snappy | zstandard1-9` (`JdbcAvroArgs.java:54-63`)
   *   - 1 MiB sync interval for splittability (`JdbcAvroIO.java:135`)
   *   - `created_by` file metadata
-  *   - rows are encoded straight from Spark `InternalRow` to Avro binary with
-  *     a reused buffer and `appendEncoded`, never materializing a
-  *     `GenericRecord` — same zero-copy design as the reference's
-  *     `JdbcAvroRecordConverter.java:80-117`
+  *   - each row moves once, from the scan's memory into the container's
+  *     block buffer: a `DatumWriter[InternalRow]` runs the compiled
+  *     [[RowBinaryEncoder]] columns against `DataFileWriter`'s own buffered
+  *     block encoder, never materializing a `GenericRecord` or a per-row
+  *     staging buffer — the reference's converter design
+  *     (`JdbcAvroRecordConverter.java:80-117`) minus its staging copy
+  *   - a plan that is only a columnar scan turned into rows (a full-table
+  *     parquet read: `WholeStageCodegen(ColumnarToRow(scan))` whose output
+  *     is the frame's schema) is read batch by batch, each
+  *     `ColumnarBatchRow` straight off the column vectors; every other
+  *     plan (JDBC scans, filters, limits, reordered projections, exchanges)
+  *     runs through `toRdd`, which first copies each row into an `UnsafeRow`
   *
   * Scale design: all data moves executor-side (`mapPartitionsWithIndex`); the
   * driver only writes tiny metadata side-files. Each task writes to a
@@ -118,10 +129,11 @@ object AvroSink {
     val meterFlushes = sc.longAccumulator("meterFlushes")
 
     val sparkSchema = df.schema
-    // Serializable snapshot of the Hadoop conf keys we need executor-side.
-    val fsDefault = sc.hadoopConfiguration.get("fs.defaultFS", "file:///")
+    // Tasks open their files with the driver's Hadoop conf (`spark.hadoop.*`,
+    // custom filesystems), shipped once per executor.
+    val hadoopConf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
 
-    val rdd0 = df.queryExecution.toRdd // InternalRow — avoids Row materialization
+    val rdd0 = exportRows(df)
     // A zero-partition plan (e.g. an empty LocalRelation) would run no
     // tasks at all: no part files, yet the manifest below names one —
     // an export AvroSource then rejects. One empty partition makes the
@@ -133,34 +145,33 @@ object AvroSink {
     val job = rdd.mapPartitionsWithIndex { (idx, rows) =>
       val t0 = System.currentTimeMillis()
       val schema = new Schema.Parser().parse(schemaJson)
-      val conf = new Configuration()
-      conf.set("fs.defaultFS", fsDefault)
       val finalPath = new Path(outputDir, f"part-$idx%05d-of-$numPartitions%05d.avro")
       // The temp name carries the task attempt id so concurrent speculative /
       // zombie attempts for the same partition never write the same file —
       // each attempt races only on the final atomic rename.
       val attemptId = Option(org.apache.spark.TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
       val tmpPath = new Path(outputDir, f".tmp-part-$idx%05d-of-$numPartitions%05d-attempt-$attemptId.avro")
-      val fs = finalPath.getFileSystem(conf)
+      val fs = finalPath.getFileSystem(hadoopConf.value.value)
       fs.setWriteChecksum(false) // no .crc sidecars on the local FS
       var n = 0L
       var queryElapsed = 0L
-      var writer: DataFileWriter[GenericRecord] = null
+      var writer: DataFileWriter[InternalRow] = null
       // If ANYTHING from stream creation through the final flush fails,
       // delete our temp before rethrowing: readers skip dot-files anyway,
       // but a retried task must not leave partial containers accumulating
       // next to committed parts.
       try {
         val out = fs.create(tmpPath, true)
-        writer = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
+        writer = new DataFileWriter[InternalRow](
+          new RowDatumWriter(RowBinaryEncoder.compile(sparkSchema, nullableArrayItems)))
         writer.setCodec(codecFactory(codec))
         writer.setSyncInterval(1 << 20) // 1 MiB, JdbcAvroIO.java:135
         writer.setMeta("created_by", "dbeamspark")
+        // Buffered, not Avro's default direct encoder: fields land in the
+        // block buffer in chunks instead of one synchronized write each.
+        writer.setEncoder(blockBuffer => EncoderFactory.get.binaryEncoder(blockBuffer, null))
         writer.create(schema, out)
 
-        val encoderFns = RowBinaryEncoder.compile(sparkSchema, nullableArrayItems)
-        val buf = new RowBinaryEncoder.ExposedByteArrayOutputStream()
-        val binaryEncoder = EncoderFactory.get.directBinaryEncoder(buf, null)
         val tFirst = System.currentTimeMillis()
         // In-flight metering cadence (reference `avro/JdbcAvroMetering.java:54-78`,
         // r13): every `meterEveryRows` rows the task flushes its running count
@@ -173,10 +184,7 @@ object AvroSink {
         while (rows.hasNext) {
           val row = rows.next() // pulling from the iterator IS the "query execution"
           if (n == 0) queryElapsed = System.currentTimeMillis() - tFirst
-          buf.reset()
-          RowBinaryEncoder.encodeRow(row, encoderFns, binaryEncoder)
-          binaryEncoder.flush()
-          writer.appendEncoded(ByteBuffer.wrap(buf.rawBuffer, 0, buf.size()))
+          writer.append(row)
           n += 1
           sinceFlush += 1
           if (sinceFlush == meterEveryRows) {
@@ -195,7 +203,12 @@ object AvroSink {
         case e: Throwable =>
           if (writer != null) { try { writer.close() } catch { case _: Throwable => () } }
           try { fs.delete(tmpPath, false) } catch { case _: Throwable => () }
-          throw e
+          // `append` wraps what the encoder threw (e.g. the targeted
+          // null-array-item error); surface the encoder's own failure.
+          throw (e match {
+            case a: DataFileWriter.AppendWriteException if a.getCause != null => a.getCause
+            case other => other
+          })
       }
       val written = fs.getFileStatus(tmpPath).getLen
       // NEVER delete finalPath: it only ever appears via an atomic rename, so
@@ -245,6 +258,39 @@ object AvroSink {
       meterFlushes.value)
   }
 
+  /** The rows to export. A plan that is only a columnar scan turned into
+    * rows ([[columnarScan]]) yields each column batch's own rows, read in
+    * place from the vectors; any other plan runs through `toRdd`.
+    */
+  private def exportRows(df: DataFrame): RDD[InternalRow] = columnarScan(df) match {
+    case Some(scan) => scan.executeColumnar().mapPartitions(_.flatMap(_.rowIterator().asScala))
+    case None => df.queryExecution.toRdd // InternalRow — avoids Row materialization
+  }
+
+  /** The scan under `df`'s physical plan when the plan is exactly
+    * `WholeStageCodegen(ColumnarToRow(scan))` (the scan sits behind the
+    * stage's `InputAdapter`) and the scan's output is `df`'s schema (names
+    * and types, in order): the batches' rows ARE the frame's rows, with no
+    * filter, limit or projection between.
+    */
+  private[graft] def columnarScan(df: DataFrame): Option[SparkPlan] =
+    df.queryExecution.executedPlan match {
+      case WholeStageCodegenExec(ColumnarToRowExec(InputAdapter(scan)))
+          if scan.output.map(a => (a.name, a.dataType)) ==
+            df.schema.fields.toSeq.map(f => (f.name, f.dataType)) =>
+        Some(scan)
+      case _ => None
+    }
+
+  /** Encodes rows for `DataFileWriter.append`, straight into the container's
+    * block encoder.
+    */
+  private final class RowDatumWriter(fns: Array[RowBinaryEncoder.FieldEncoder])
+      extends DatumWriter[InternalRow] {
+    override def setSchema(schema: Schema): Unit = ()
+    override def write(row: InternalRow, out: Encoder): Unit = RowBinaryEncoder.encodeRow(row, fns, out)
+  }
+
   /** Executor-side progress logger for the metering cadence — one shared
     * slf4j logger (the Spark log4j pipeline), resolved lazily per JVM.
     */
@@ -267,17 +313,30 @@ object RowBinaryEncoder {
 
   /** ByteArrayOutputStream with buffer exposed to avoid a copy per row —
     * same trick as the reference (`JdbcAvroRecordConverter.java:34-46`).
+    * The sink does not use it (it encodes into the container's block
+    * buffer); it stays for callers that encode rows in isolation, such as
+    * perfbench's per-row encode timing.
     */
   final class ExposedByteArrayOutputStream extends ByteArrayOutputStream(64 * 1024) {
     def rawBuffer: Array[Byte] = buf
   }
 
-  type FieldEncoder = (InternalRow, Int, org.apache.avro.io.Encoder) => Unit
+  /** One column's encoder. A one-method trait rather than a `Function3`, so
+    * the ordinal stays a primitive `int` instead of boxing per call.
+    */
+  trait FieldEncoder {
+    def apply(r: InternalRow, i: Int, e: Encoder): Unit
+  }
+
+  /** One array item's encoder, for the same reason as [[FieldEncoder]]. */
+  trait ItemEncoder {
+    def apply(a: ArrayData, j: Int, e: Encoder): Unit
+  }
 
   def compile(schema: StructType, nullableArrayItems: Boolean = false): Array[FieldEncoder] =
     schema.fields.map(f => fieldEncoder(f.dataType, nullableArrayItems))
 
-  def encodeRow(row: InternalRow, fns: Array[FieldEncoder], enc: org.apache.avro.io.Encoder): Unit = {
+  def encodeRow(row: InternalRow, fns: Array[FieldEncoder], enc: Encoder): Unit = {
     var i = 0
     while (i < fns.length) {
       if (row.isNullAt(i)) enc.writeIndex(0)
@@ -300,12 +359,12 @@ object RowBinaryEncoder {
     case BinaryType => (r, i, e) => e.writeBytes(r.getBinary(i))
     case d: DecimalType =>
       (r, i, e) => e.writeString(r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toString)
-    case StringType => (r, i, e) => e.writeString(new org.apache.avro.util.Utf8(r.getUTF8String(i).getBytes))
+    case StringType => (r, i, e) => writeUtf8(r.getUTF8String(i), e)
     case ArrayType(elem, _) =>
       val inner = arrayItemEncoder(elem)
       // Null items: encoded as union branch 0 when nullableArrayItems, else a
       // targeted failure — reference `JdbcAvroRecordConverter.java:140-160`.
-      val itemEnc: (ArrayData, Int, org.apache.avro.io.Encoder) => Unit =
+      val itemEnc: ItemEncoder =
         if (nullableArrayItems) { (a, j, e) =>
           if (a.isNullAt(j)) e.writeIndex(0) else { e.writeIndex(1); inner(a, j, e) }
         } else { (a, j, e) =>
@@ -330,18 +389,28 @@ object RowBinaryEncoder {
     case other => throw new RuntimeException(s"Unsupported column type for avro export: ${other.sql}")
   }
 
-  private def arrayItemEncoder(dt: DataType): (ArrayData, Int, org.apache.avro.io.Encoder) => Unit =
+  private def arrayItemEncoder(dt: DataType): ItemEncoder =
     dt match {
       case LongType => (a, j, e) => e.writeLong(a.getLong(j))
       case IntegerType => (a, j, e) => e.writeInt(a.getInt(j))
       case DoubleType => (a, j, e) => e.writeDouble(a.getDouble(j))
       case FloatType => (a, j, e) => e.writeFloat(a.getFloat(j))
       case BooleanType => (a, j, e) => e.writeBoolean(a.getBoolean(j))
-      case StringType => (a, j, e) => e.writeString(new org.apache.avro.util.Utf8(a.getUTF8String(j).getBytes))
+      case StringType => (a, j, e) => writeUtf8(a.getUTF8String(j), e)
       case BinaryType => (a, j, e) => e.writeBytes(a.getBinary(j))
       case other =>
         throw new RuntimeException(
           s"Unsupported array item type for avro export: ${other.sql}. " +
             "Set nullableArrayItems / use bytes array mode for exotic items.")
     }
+
+  /** An Avro string is its byte length plus its UTF-8 bytes, so a string
+    * backed by a heap array is written from that array in place; any other
+    * backing (off-heap column vectors) is copied out first.
+    */
+  private def writeUtf8(s: UTF8String, e: Encoder): Unit = s.getBaseObject match {
+    case bytes: Array[Byte] =>
+      e.writeBytes(bytes, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+    case _ => e.writeBytes(s.getBytes)
+  }
 }

@@ -6,10 +6,10 @@ import org.apache.avro.Schema
 import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.util.Utf8
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Reads Avro container files (the sink's own output format) back into a
   * DataFrame — no spark-avro on this classpath, so this is a small
@@ -69,17 +69,16 @@ object AvroSource {
     }
     val sparkSchema = toStructType(avroSchema)
     val schemaJson = avroSchema.toString
-    val fsDefault = conf.get("fs.defaultFS", "file:///")
+    // Tasks open the parts with the driver's Hadoop conf, as the sink does.
+    val taskConf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
 
     val rows = spark.sparkContext
       .parallelize(files.toIndexedSeq, files.length)
       .flatMap { file =>
-        val c = new Configuration()
-        c.set("fs.defaultFS", fsDefault)
         val p = new Path(file)
         val schema = new Schema.Parser().parse(schemaJson)
         val stream = new DataFileStream[GenericRecord](
-          p.getFileSystem(c).open(p), new GenericDatumReader[GenericRecord](schema))
+          p.getFileSystem(taskConf.value.value).open(p), new GenericDatumReader[GenericRecord](schema))
         // Close on task completion too: a consumer that abandons the
         // iterator early (LIMIT, take) never reaches the drained-close in
         // hasNext, and a long-lived executor would leak the file handle.

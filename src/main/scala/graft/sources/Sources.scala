@@ -24,9 +24,23 @@ trait Source {
   def queries(spark: SparkSession): Seq[String]
 }
 
-/** JDBC source with dbeam's exact split semantics. No JDBC driver jar ships
-  * in this environment, so this path is compile- and unit-level tested only
-  * (SURVEY §7.5 risk 5); the query strings it generates are golden-tested
+object Source {
+  /** A split-column bound as a Long. Any integral type reads through
+    * `Number.longValue`; NULL (an empty table) reads as 0, matching the
+    * reference's `ResultSet.getLong` on SQL NULL (`QueryBuilderArgs.java`
+    * bounds probe), so the export degrades to one empty range.
+    */
+  def splitBound(v: Any): Long = v match {
+    case null => 0L
+    case n @ (_: java.lang.Long | _: java.lang.Integer | _: java.lang.Short | _: java.lang.Byte) =>
+      n.asInstanceOf[Number].longValue
+    case other => throw new IllegalArgumentException(s"non-integral split bound: $other")
+  }
+}
+
+/** JDBC source with dbeam's exact split semantics. It runs end to end on
+  * embedded Derby (`DerbyJdbcSpec`) and on the in-repo stub drivers
+  * (`JdbcRuntimeSpec`); the query strings it generates are golden-tested
   * and the per-connection query protocol (preCommands + statement hook) is
   * verified against a recording fake Connection in JdbcProtocolSpec.
   *
@@ -137,12 +151,8 @@ final case class JdbcSource(conn: ConnectionArgs, args: QueryArgs, fetchSize: In
       case ArrayMode.TypedFirstRow => () // first-row probe after the read below
     }
     val df = (args.queryParallelism, args.splitColumn) match {
-      case (Some(_), Some(sp)) =>
-        // Bounds via one agg query on an un-split frame (reference S4 probe).
-        val probe = spark.read.jdbc(conn.url, table, p)
-        val row = probe.agg(min(col(sp)), max(col(sp))).head()
-        val preds = predicates(_ => (nullToZero(row, 0), nullToZero(row, 1)))
-        spark.read.jdbc(conn.url, table, preds, p)
+      case (Some(_), Some(_)) =>
+        spark.read.jdbc(conn.url, table, predicates(bounds(spark, _)), p)
       case _ =>
         spark.read.jdbc(conn.url, table, p)
     }
@@ -159,19 +169,25 @@ final case class JdbcSource(conn: ConnectionArgs, args: QueryArgs, fetchSize: In
   }
 
   override def queries(spark: SparkSession): Seq[String] =
-    args.buildQueries { sp =>
-      val probe = spark.read.jdbc(conn.url, dbtable, props)
-      val row = probe.agg(min(col(sp)), max(col(sp))).head()
-      (nullToZero(row, 0), nullToZero(row, 1))
-    }
+    args.buildQueries(bounds(spark, _))
 
-  /** NULL min/max bounds (an empty table) read as 0, matching the
-    * reference's `ResultSet.getLong` semantics on SQL NULL
-    * (`QueryBuilderArgs.java` bounds probe): the export degrades to one
-    * empty range instead of crashing with an NPE.
+  private var probedBounds: Option[(Long, Long)] = None
+
+  /** (min, max) of the split column, probed once per source and in the
+    * database: the reference's MIN/MAX query over the filtered, limited
+    * query (`QueryArgs.minMaxSql`, `ParallelQueryBuilder.java:46-79`) as
+    * a derived table, so one row comes back. Spark's JDBC relation pushes
+    * no aggregate down; an `agg` on the scan would stream the whole split
+    * column through one task instead.
     */
-  private def nullToZero(row: org.apache.spark.sql.Row, i: Int): Long =
-    if (row.isNullAt(i)) 0L else row.getLong(i)
+  private def bounds(spark: SparkSession, sp: String): (Long, Long) = synchronized {
+    probedBounds.getOrElse {
+      val row = spark.read.jdbc(conn.url, s"(${args.minMaxSql(sp)}) graft_bounds", props).head()
+      val b = (Source.splitBound(row.get(0)), Source.splitBound(row.get(1)))
+      probedBounds = Some(b)
+      b
+    }
+  }
 }
 
 /** Parquet-backed source applying the same query semantics as Catalyst
@@ -216,7 +232,7 @@ final case class ParquetSource(path: String, tableName: String, args: QueryArgs)
         SplitColumn.validate(base, sp)
         val bounds = filtered.agg(min(col(sp)), max(col(sp))).head()
         val ranges = ParallelRanges.generate(
-          toLong(bounds.get(0)), toLong(bounds.get(1)), k)
+          Source.splitBound(bounds.get(0)), Source.splitBound(bounds.get(1)), k)
         val perSplitLimit = args.limit.map(n => (n / k).toInt)
         ranges.map { r =>
           val hi = if (r.endInclusive) col(sp) <= r.end else col(sp) < r.end
@@ -227,18 +243,10 @@ final case class ParquetSource(path: String, tableName: String, args: QueryArgs)
     }
   }
 
-  private def toLong(v: Any): Long = v match {
-    case null => 0L // empty table: NULL bounds read as 0, like JDBC getLong
-    case l: Long => l
-    case i: Int => i.toLong
-    case s: Short => s.toLong
-    case other => throw new IllegalArgumentException(s"non-integral split bound: $other")
-  }
-
   override def queries(spark: SparkSession): Seq[String] = {
     args.buildQueries { sp =>
       val row = read(spark).agg(min(col(sp)), max(col(sp))).head()
-      (toLong(row.get(0)), toLong(row.get(1)))
+      (Source.splitBound(row.get(0)), Source.splitBound(row.get(1)))
     }
   }
 }

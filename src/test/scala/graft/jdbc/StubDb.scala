@@ -27,6 +27,8 @@ import scala.jdk.CollectionConverters._
   *   - our `QueryBuilder` inner queries: `SELECT * FROM t WHERE 1=1
   *     [AND c >= x AND c < y] [LIMIT n]`, nested derived tables
   *     (`(…) as user_sql_query`);
+  *   - the split-bounds probe `SELECT MIN(c) as a, MAX(c) as b FROM …`
+  *     (integral columns), aggregated before any `LIMIT` as in SQL;
   *   - conjunctive predicates with `>= <= < > = <> !=`, `IS [NOT] NULL`,
   *     numeric / quoted-string / timestamp literals;
   *   - the Postgres replication-lag query (matched on its
@@ -247,8 +249,10 @@ object StubDb {
           }
         }
         val filtered = where.map(w => base.copy(rows = base.rows.filter(evalWhere(base, w, _)))).getOrElse(base)
-        val limited = limit.map(n => filtered.copy(rows = filtered.rows.take(n))).getOrElse(filtered)
-        project(selectList.trim, limited)
+        def limited(t: Table) = limit.map(n => t.copy(rows = t.rows.take(n))).getOrElse(t)
+        val items = splitTopLevel(selectList.trim, ",")
+        if (items.forall(AggItem.matches)) limited(aggregate(items, filtered))
+        else project(selectList.trim, limited(filtered))
       case _ => throw new java.sql.SQLException(s"stub: unsupported query: $sql")
     }
   }
@@ -351,6 +355,21 @@ object StubDb {
       case b: java.lang.Boolean => b.compareTo(lit.toBoolean)
       case other => throw new java.sql.SQLException(s"stub: cannot compare $other to $lit")
     }
+  }
+
+  private val AggItem = "(?is)^(MIN|MAX)\\((.+)\\)\\s+as\\s+(\\S+)$".r
+
+  /** One row of `MIN(c) as a` / `MAX(c) as b` over integral columns; NULL
+    * over no (non-NULL) rows.
+    */
+  private def aggregate(items: Vector[String], t: Table): Table = {
+    val cols = items.map { case AggItem(fn, c, alias) =>
+      val idx = t.colIndex(stripQuotes(c))
+      val vals = t.rows.map(_(idx)).collect { case n: Number => n }
+      val pick = if (fn.equalsIgnoreCase("MIN")) vals.minByOption(_.longValue) else vals.maxByOption(_.longValue)
+      (t.cols(idx).copy(name = alias, nullable = true), pick.orNull: Any)
+    }
+    Table(cols.map(_._1), Vector(cols.map(_._2)))
   }
 
   private def project(selectList: String, t: Table): Table =
